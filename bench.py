@@ -45,6 +45,9 @@ total, kept for record-format continuity) and ``cold_total`` (each
 query's FIRST rep; under the default memoized mode rep 1 pays any
 shared family-frame build) are context, to be read with the variance
 caveat.  BENCH_DIFF.md documents the same-code envelope protocol.
+
+The printed JSON is also written to ``BENCH_LAST.json`` next to this
+file, or to the path in $SPARK_GRAFT_BENCH_LAST when that is set.
 """
 
 from __future__ import annotations
@@ -174,9 +177,11 @@ def main() -> None:
         out["subset"] = "driver50" if names is DRIVER50 else "only"
     # insurance against stdout truncation (round-11: BENCH_r10 was lost
     # mid-JSON in capture) — additive, the printed contract is unchanged
+    last = os.environ.get("SPARK_GRAFT_BENCH_LAST") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"
+    )
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_LAST.json"), "w") as fh:
+        with open(last, "w") as fh:
             json.dump(out, fh)
     except OSError:
         pass

@@ -48,17 +48,26 @@ _NANO_TS_COLS = {
 _TABLE_PLAN_MEMO: dict[tuple, DataFrame] = {}
 _TABLE_PLAN_MEMO_CAP = 256
 
+#: Raw (pre-normalization) parquet schema under the same key, so a
+#: streaming replay skips its schema-inference job once the table was
+#: read (``streaming.jobs.read_events_stream``).
+_RAW_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
 
 #: applicationIds whose session confs are already pinned — every
 #: conf.set is a py4j round-trip, and load_table runs 1–5x per query
 #: (r12 driver-floor shave: ~7 round-trips per call → once per session).
-#: Runtime confs are never changed back by the engine, so once-per-app
-#: is equivalent; a new session (new applicationId) re-pins.
+#: A new session (new applicationId) re-pins.
 _CONFS_PINNED: set[str] = set()
 
+_TZ_KEY = "spark.sql.session.timeZone"
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one driver testdata table (S1 analog)."""
+
+def _pin_confs(spark: SparkSession) -> str:
+    """Pin the engine's session confs once per application; return its
+    applicationId.  The session zone is re-checked on every call (one
+    conf read) because a caller may move it after the pin, and every
+    cast from ``timestamp_ntz`` and every day bucket follows it."""
     app = spark.sparkContext.applicationId
     if app not in _CONFS_PINNED:
         apply_runtime_confs(spark)
@@ -67,28 +76,64 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if len(_CONFS_PINNED) > 64:  # pathological many-session guard
             _CONFS_PINNED.clear()
             _CONFS_PINNED.add(app)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key: tuple | None
+    else:
+        conf = spark.conf
+        if conf.get(_TZ_KEY) != "UTC":
+            conf.set(_TZ_KEY, "UTC")
+    return app
+
+
+def _memo_key(app: str, path: str) -> tuple | None:
     try:
         st = os.stat(path)
-        key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
     except OSError:
-        key = None  # globs / non-local paths: fall through, no memo
-    if key is not None and key in _TABLE_PLAN_MEMO:
-        return _TABLE_PLAN_MEMO[key]
-    df = spark.read.parquet(path)
+        return None  # globs / non-local paths: no memo
+    return (app, path, st.st_mtime_ns, st.st_size)
+
+
+def _memo_put(memo: dict, key: tuple | None, value) -> None:
+    if key is None:
+        return
+    while len(memo) >= _TABLE_PLAN_MEMO_CAP:
+        memo.pop(next(iter(memo)))
+    memo[key] = value
+
+
+def _read_raw(spark: SparkSession, path: str, key: tuple | None) -> DataFrame:
+    """``spark.read.parquet(path)``, recording its schema under *key*."""
+    raw = spark.read.parquet(path)
+    _memo_put(_RAW_SCHEMA_MEMO, key, raw.schema)
+    return raw
+
+
+def _raw_schema(spark: SparkSession, path: str, key: tuple | None) -> StructType:
+    """The parquet schema of *path* before normalization, memoized."""
+    hit = _RAW_SCHEMA_MEMO.get(key) if key is not None else None
+    return hit if hit is not None else _read_raw(spark, path, key).schema
+
+
+def _normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
+    """Land every timestamp column of *table* as micros TimestampType."""
     for c, t in df.dtypes:
-        if c in _NANO_TS_COLS.get(name, ()) and t == "bigint":
+        if c in _NANO_TS_COLS.get(table, ()) and t == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
         elif t == "timestamp_ntz":
             # naive parquet timestamps == UTC instants (session tz is pinned
             # to UTC); normalize to TimestampType so downstream epoch math
             # (cast to long/double) is legal and engine-consistent
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if key is not None:
-        while len(_TABLE_PLAN_MEMO) >= _TABLE_PLAN_MEMO_CAP:
-            _TABLE_PLAN_MEMO.pop(next(iter(_TABLE_PLAN_MEMO)))
-        _TABLE_PLAN_MEMO[key] = df
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Columnar scan of one driver testdata table (S1 analog)."""
+    app = _pin_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _memo_key(app, path)
+    if key is not None and key in _TABLE_PLAN_MEMO:
+        return _TABLE_PLAN_MEMO[key]
+    df = _normalize_timestamps(_read_raw(spark, path, key), name)
+    _memo_put(_TABLE_PLAN_MEMO, key, df)
     return df
 
 

@@ -10,6 +10,19 @@ the same logical plans scale to a real multi-executor cluster at ~100 TB:
 - Session timezone pinned to UTC — all window/day bucketing in the engine
   is epoch-aligned and must not depend on the host's zone (the DuckDB
   oracle computes over naive==UTC timestamps).
+- Python workers fork from ``_pydaemon`` instead of ``pyspark.daemon``.
+  pyspark calls ``importlib.invalidate_caches()`` at the start of every
+  Python task, and on CPython < 3.13 that re-reads the central directory
+  of every zip archive on the worker's ``sys.path``: pyspark.zip (1,328
+  entries, about a dozen importers) and the spark-core jar (5,359
+  entries, no ``.py`` files), about 250 ms of worker CPU per task before
+  the first row.  ``_pydaemon`` re-reads an archive only when its stat
+  stamp changed, so ``addPyFile`` archives and rewritten archives are
+  still picked up.  CPython 3.13 made ``zipimporter.invalidate_caches``
+  lazy; once workers run Python >= 3.13 the module does nothing and can
+  be deleted together with ``PYTHON_DAEMON_MODULE`` below.  Sessions
+  built elsewhere (e.g. a host-supplied driver session) keep Spark's
+  default daemon.
 """
 
 from __future__ import annotations
@@ -31,6 +44,18 @@ RUNTIME_CONFS: dict[str, str] = {
     # this is on
     "spark.sql.python.filterPushdown.enabled": "true",
 }
+
+
+#: the worker daemon module; see the module docstring
+PYTHON_DAEMON_MODULE = "flinkecuserbehavioranalysis_spark._pydaemon"
+
+
+def _workers_can_import_package() -> bool:
+    """Whether a ``python -m`` worker started in this process's cwd with
+    its PYTHONPATH finds this package (local mode inherits both)."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -62,6 +87,8 @@ def get_spark(app_name: str = "flink-ec-spark", shuffle_partitions: int | None =
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
+    if _workers_can_import_package():
+        builder = builder.config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -30,7 +30,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_confs
+from ..io import _memo_key, _normalize_timestamps, _pin_confs, _raw_schema
 
 
 def read_events_stream(
@@ -41,10 +41,9 @@ def read_events_stream(
 ) -> DataFrame:
     """File-replay stream over a testdata parquet table (the streaming
     analog of the reference's readTextFile replays, S1)."""
-    apply_runtime_confs(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    app = _pin_confs(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    static = spark.read.parquet(path)
+    schema = _raw_schema(spark, path, _memo_key(app, path))
     if os.path.isdir(path):
         # Spark-written dataset directory (the scratch scale-up SFs):
         # already a directory of part files — stream it directly.  The
@@ -72,16 +71,10 @@ def read_events_stream(
                 os.symlink(path, link)
         else:
             os.symlink(path, link)
-    reader = spark.readStream.schema(static.schema)
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(view_dir)
-    for c, t in df.dtypes:
-        if c == "ts" and t == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        elif t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return _normalize_timestamps(reader.parquet(view_dir), table)
 
 
 def streaming_windowed_count(

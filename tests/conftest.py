@@ -96,11 +96,34 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="soak tier is opt-in: set SPARK_GRAFT_SOAK=1 (or -m soak)"
     )
+    named = _named_by_node_id(config)
     for item in items:
         if "soak" in item.keywords and not any(
             item.nodeid.endswith(rep) for rep in _SOAK_REPRESENTATIVES
-        ):
+        ) and not _is_named(item, named):
             item.add_marker(skip)
+
+
+def _named_by_node_id(config) -> list[tuple[str, str]]:
+    """(real file path, test name) of each argument naming a node id
+    (``file::test`` or ``file::test[param]``): a test asked for by name
+    runs even when it is soak-tier."""
+    here = str(config.invocation_params.dir)
+    named = []
+    for arg in config.args:
+        if "::" in arg:
+            path, name = arg.split("::", 1)
+            named.append((os.path.realpath(os.path.join(here, path)), name))
+    return named
+
+
+def _is_named(item, named) -> bool:
+    name = item.nodeid.split("::", 1)[-1]
+    path = os.path.realpath(str(item.path))
+    return any(
+        path == p and (name == n or name.startswith(n + "[") or name.startswith(n + "::"))
+        for p, n in named
+    )
 
 
 @pytest.fixture(scope="session")

@@ -431,17 +431,19 @@ def test_results_invariant_under_partitioning(spark):
 
 
 @pytest.mark.soak
-def test_bench_contract_single_json_line():
+def test_bench_contract_single_json_line(tmp_path):
     """bench.py must print exactly one parseable JSON line with the
-    driver-contract keys, exercised at the smoke scale factor."""
+    driver-contract keys, exercised at the smoke scale factor.  Its
+    BENCH_LAST.json copy goes to *tmp_path*, not the repository root."""
     import json
     import os
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    last = tmp_path / "BENCH_LAST.json"
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-               SPARK_GRAFT_CPUS="8")
+               SPARK_GRAFT_CPUS="8", SPARK_GRAFT_BENCH_LAST=str(last))
     # --reps 1: the contract under test is the OUTPUT SHAPE, not the
     # median protocol — the default 3 reps tripled the full-registry
     # smoke run past the subprocess timeout once the registry passed
@@ -458,6 +460,7 @@ def test_bench_contract_single_json_line():
     assert d["sf"] == 0.001
     assert d["reps"] == 1 and d["cold_total"] >= d["value"] > 0
     assert 0 < d["driver50_total"] < d["value"]
+    assert json.loads(last.read_text()) == d
 
 
 def test_hash_split_stability(spark):
