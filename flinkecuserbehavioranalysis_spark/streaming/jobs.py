@@ -235,12 +235,16 @@ def streaming_uv_update(
     Structured Streaming's ``update`` output mode emits the running
     value once per micro-batch instead (same semantics at batch
     granularity — run with ``output_mode='update'``).  The bloom
-    filter/Redis bitmap becomes a mergeable HLL++ sketch in the state
-    store."""
+    filter/Redis bitmap becomes a mergeable DataSketches HLL sketch in
+    the state store (``operators.distinct.approx_distinct``): one binary
+    buffer column per window, where HLL++ kept 1,639 long columns at
+    ``rsd=0.01``."""
+    from ..operators.distinct import approx_distinct
+
     wm = stream.withWatermark(ts_col, watermark)
     return (
         wm.groupBy(F.window(F.col(ts_col), size).alias("w"))
-        .agg(F.approx_count_distinct(distinct_col, rsd).alias("uv"))
+        .agg(approx_distinct(distinct_col, rsd).alias("uv"))
         .select(
             F.col("w.start").cast("long").alias("ws"),
             F.col("w.end").cast("long").alias("we"),

@@ -55,6 +55,18 @@ def test_partial_aggregation(spark):
     assert "Exchange" in plan
 
 
+def test_approx_uv_aggregates_stay_under_codegen_width(spark):
+    """HLL++ carried 1,639 long buffer columns per window at rsd=0.01,
+    too wide for whole-stage codegen; the DataSketches sketch is one
+    binary column."""
+    from scripts.plan_audit import wide_aggregates
+
+    plan = _explain(spark, "unique_visitors_approx")
+    assert "hll_sketch_agg" in plan and "approx_count_distinct" not in plan
+    max_fields = int(spark.conf.get("spark.sql.codegen.maxFields"))
+    assert wide_aggregates(plan, max_fields) == 0, plan
+
+
 def test_windowed_count_single_shuffle(spark):
     plan = _explain(spark, "page_view_count")
     # one exchange for the (window) grouping — no extra repartitions

@@ -332,7 +332,7 @@ def test_ivf_recall_at_10_floor(spark):
 
 
 def test_hll_uv_within_tolerance(spark):
-    """approx_count_distinct (HLL++, the bloom-filter replacement) must
+    """The DataSketches HLL sketch (the bloom-filter replacement) must
     land within a few rsd of the exact per-window UV."""
     from flinkecuserbehavioranalysis_spark.io import load_table
     from flinkecuserbehavioranalysis_spark.operators.distinct import (
@@ -353,6 +353,45 @@ def test_hll_uv_within_tolerance(spark):
     assert set(exact) == set(approx)
     for w, ex in exact.items():
         assert abs(approx[w] - ex) <= max(3, 5 * 0.05 * ex), (w, ex, approx[w])
+
+
+def test_approx_lgk_follows_hllpp_precision_rule():
+    """rsd maps to the register exponent HLL++ would use, and an rsd the
+    sketch cannot honour is refused rather than clamped."""
+    from flinkecuserbehavioranalysis_spark.operators.distinct import approx_lgk
+
+    assert approx_lgk(0.01) == 14
+    assert approx_lgk(0.05) == 9
+    for rsd in (0.5, 1e-4):
+        with pytest.raises(ValueError):
+            approx_lgk(rsd)
+
+
+def test_hll_uv_within_tolerance_in_hll_mode(spark):
+    """At 80k distinct ids per window the sketch is far past its exact
+    list/set modes; the estimate must still land within 3·rsd."""
+    from flinkecuserbehavioranalysis_spark.operators.distinct import (
+        windowed_distinct_count,
+    )
+
+    n, groups, rsd = 240_000, 3, 0.01
+    ev = spark.range(n).select(
+        F.col("id").alias("user_id"),
+        F.timestamp_seconds(F.lit(1_700_002_800) + (F.col("id") % groups) * 3600).alias("ts"),
+    )
+    exact = {
+        r.ws: r.uv for r in windowed_distinct_count(ev, "ts", "1 hour", "user_id").collect()
+    }
+    approx = {
+        r.ws: r.uv
+        for r in windowed_distinct_count(
+            ev, "ts", "1 hour", "user_id", approx=True, rsd=rsd
+        ).collect()
+    }
+    assert len(exact) == groups and set(exact) == set(approx)
+    for w, ex in exact.items():
+        assert ex == n // groups
+        assert abs(approx[w] - ex) <= 3 * rsd * ex, (w, ex, approx[w])
 
 
 def test_percentile_approx_tracks_exact_quantiles(spark):

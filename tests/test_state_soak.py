@@ -49,7 +49,14 @@ T0 = 1_700_000_000  # any fixed epoch anchor
 
 def _write_slice_files(src_dir: str, pdf: pd.DataFrame, lo: int, hi: int) -> None:
     """Write time-ordered slices [lo, hi) of *pdf* as single parquet
-    files (microsecond timestamps — no NANOS legacy conf needed)."""
+    files (microsecond timestamps — no NANOS legacy conf needed).
+
+    The file source hands ``maxFilesPerTrigger`` files out in
+    modification-time order (milliseconds) and breaks ties by directory
+    listing order, not by name.  Slices written back to back can share a
+    millisecond, which replays a later slice first and moves the
+    watermark past earlier events; so slice *i* gets mtime ``T0 + i``,
+    strictly increasing across segments too."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -58,10 +65,9 @@ def _write_slice_files(src_dir: str, pdf: pd.DataFrame, lo: int, hi: int) -> Non
     for i in range(lo, hi):
         sl = pdf.iloc[bounds[i] : bounds[i + 1]].copy()
         sl["ts"] = sl["ts"].astype("datetime64[us]")
-        pq.write_table(
-            pa.Table.from_pandas(sl, preserve_index=False),
-            os.path.join(src_dir, f"slice_{i:03d}.parquet"),
-        )
+        path = os.path.join(src_dir, f"slice_{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pandas(sl, preserve_index=False), path)
+        os.utime(path, (T0 + i, T0 + i))
 
 
 def _state_rows(q) -> list[int]:

@@ -400,6 +400,63 @@ def test_streaming_uv_update_mode(spark):
     assert _rows(got, ["ws", "we", "uv"]) == _rows(batch, ["ws", "we", "uv"])
 
 
+def test_streaming_uv_update_merges_sketch_state_across_batches(spark, tmp_path):
+    """Replayed one time-ordered slice per micro-batch, windows straddle
+    batches, so the state store merges sketches; each window's last
+    update must equal the batch estimate over the same rows."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flinkecuserbehavioranalysis_spark.operators.distinct import windowed_distinct_count
+    from flinkecuserbehavioranalysis_spark.streaming.jobs import streaming_uv_update
+
+    views = load_table(spark, SF_DIR, "events").filter(F.col("event_type") == "view")
+    pdf = views.select("user_id", "ts").toPandas().sort_values("ts").reset_index(drop=True)
+    # cut between distinct timestamps, so no row sits at a previous
+    # batch's watermark
+    cuts = [0]
+    for b in np.linspace(0, len(pdf), 5).astype(int)[1:-1]:
+        while 0 < b < len(pdf) and pdf["ts"].iat[b] == pdf["ts"].iat[b - 1]:
+            b += 1
+        cuts.append(b)
+    cuts.append(len(pdf))
+    src = str(tmp_path / "views")
+    os.makedirs(src)
+    for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+        sl = pdf.iloc[lo:hi].copy()
+        sl["ts"] = sl["ts"].astype("datetime64[us]")
+        path = os.path.join(src, f"slice_{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pandas(sl, preserve_index=False), path)
+        # the file source orders files by mtime; equal mtimes fall back
+        # to directory listing order
+        os.utime(path, (1_700_000_000 + i,) * 2)
+    stream = (
+        spark.readStream.schema("user_id long, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    emitted = []
+    run_bounded(
+        streaming_uv_update(stream),
+        output_mode="update",
+        foreach_batch=lambda df, epoch: emitted.extend((epoch, r) for r in df.collect()),
+    )
+    last, batches = {}, {}
+    for epoch, r in sorted(emitted, key=lambda e: e[0]):
+        last[(r.ws, r.we)] = r.uv
+        batches.setdefault((r.ws, r.we), set()).add(epoch)
+    assert len({e for e, _ in emitted}) >= 3
+    assert any(len(b) > 1 for b in batches.values()), "no window spans two batches"
+    batch = {
+        (r.ws, r.we): r.uv
+        for r in windowed_distinct_count(views, "ts", "1 hour", "user_id", approx=True).collect()
+    }
+    assert last == batch
+
+
 def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     from flinkecuserbehavioranalysis_spark.streaming.sinks import foreach_batch_upsert, read_store
 
